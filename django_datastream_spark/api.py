@@ -1077,49 +1077,51 @@ class Datastream:
     def vacuum(self) -> None:
         """Physically drop datapoints of deleted streams and compact
         superseded metadata/derived-point versions (the deferred half of
-        S5). Every rewrite lands in a fresh snapshot directory and the
-        ``_CURRENT`` pointer is swapped atomically, so concurrent READERS
-        never observe a missing path (the previous generation is retained
-        for one more swap). WRITERS must be quiesced for the duration:
-        rows appended to a table's current version dir while its rewrite
-        runs would be silently dropped by the swap — stop streaming
-        ingest (or route appends elsewhere) before vacuuming, exactly
-        like VACUUM on Delta/Iceberg requires no concurrent blind
-        appends to the files it rewrites."""
+        S5). On the commit-log tables (points_raw, points_agg) dead
+        streams' rows die by one deletion-vector commit per table, then
+        ``txn_vacuum`` removes every file the current snapshot no longer
+        references (Delta's VACUUM with zero retention). The streams log
+        and derived points are rewritten into a fresh snapshot directory
+        and the ``_CURRENT`` pointer is swapped atomically, so concurrent
+        READERS of those never observe a missing path (the previous
+        generation is retained for one more swap). WRITERS must be
+        quiesced for the duration: rows appended to a snapshot table's
+        current version dir while its rewrite runs would be silently
+        dropped by the swap, and a zero-retention vacuum sweeps the
+        staged files of an in-flight commit — stop streaming ingest (or
+        route appends elsewhere) before vacuuming, exactly like VACUUM
+        on Delta/Iceberg at zero retention."""
+        from . import txnlog as TL
+
         t = self.tables
         t.compact_streams()
         live = t.read_streams().select("stream_id")
 
-        if t.TXN_POINTS:
-            from . import txnlog as TL
-
-            if TL.is_txn_table(t.points_raw_path):
-                # dead-stream rows die by DELETION VECTORS (one commit,
-                # no partition rewrite); the id list is bounded by
-                # stream count — the same metadata scale as the
-                # streams table itself
-                dead = [
-                    r["stream_id"]
-                    for r in t.read_points_raw()
-                    .select("stream_id")
-                    .distinct()
-                    .join(live, "stream_id", "left_anti")
-                    .collect()
-                ]
-                if dead:
-                    TL.txn_delete(
-                        self.spark,
-                        t.points_raw_path,
-                        F.col("stream_id").isin(dead),
-                        writer="vacuum",
-                    )
-                TL.txn_vacuum(t.points_raw_path)
-        elif t._exists(t.points_raw_path):
-            df = t.read_points_raw().join(live, "stream_id", "left_semi")
-            t._swap_version(
-                "points_raw",
-                lambda d: df.write.partitionBy("p_date").parquet(d),
-            )
+        for read, path in (
+            (t.read_points_raw, t.points_raw_path),
+            (t.read_points_agg, t.points_agg_path),
+        ):
+            rows = read()  # adopts a legacy plain-layout table first
+            if not TL.is_txn_table(path):
+                continue
+            # dead-stream rows die by DELETION VECTORS (one commit, no
+            # partition rewrite); the id list is bounded by stream
+            # count — the same metadata scale as the streams table
+            dead = [
+                r["stream_id"]
+                for r in rows.select("stream_id")
+                .distinct()
+                .join(live, "stream_id", "left_anti")
+                .collect()
+            ]
+            if dead:
+                TL.txn_delete(
+                    self.spark,
+                    path,
+                    F.col("stream_id").isin(dead),
+                    writer="vacuum",
+                )
+            TL.txn_vacuum(path)
         if t._exists(t.points_derived_path):
             # compaction: keep only the winning version per (stream, ts)
             dd = t.read_points_derived(latest_only=True).join(
@@ -1130,34 +1132,6 @@ class Datastream:
                 lambda d: dd.withColumn("p_date", F.to_date("ts"))
                 .write.partitionBy("p_date")
                 .parquet(d),
-            )
-        if t.TXN_AGG:
-            from . import txnlog as TL
-
-            if TL.is_txn_table(t.points_agg_path):
-                dead = [
-                    r["stream_id"]
-                    for r in t.read_points_agg()
-                    .select("stream_id")
-                    .distinct()
-                    .join(live, "stream_id", "left_anti")
-                    .collect()
-                ]
-                if dead:
-                    TL.txn_delete(
-                        self.spark,
-                        t.points_agg_path,
-                        F.col("stream_id").isin(dead),
-                        writer="vacuum",
-                    )
-                TL.txn_vacuum(t.points_agg_path)
-        elif t._exists(t.points_agg_path):
-            agg = self.spark.read.parquet(t.points_agg_path).join(
-                live, "stream_id", "left_semi"
-            )
-            t._swap_version(
-                "points_agg",
-                lambda d: agg.write.partitionBy("granularity", "p_date").parquet(d),
             )
 
     # ------------------------------------------------------------------

@@ -175,21 +175,27 @@ def stream_datapoints(
     reverse = p.get("reverse", p.get("r", "")) in ("1", "true", "True")
     sx = _parse_ts(p.get("start_exclusive", p.get("sx")))
     ex = _parse_ts(p.get("end_exclusive", p.get("ex")))
+    start = _parse_ts(p.get("start", p.get("s")))
+    end = _parse_ts(p.get("end", p.get("e")))
     cursor = p.get("cursor")
     if cursor:
         cur_ts = _parse_ts(_decode_cursor(cursor, "t")["t"])
         # the page boundary narrows the range from the cursor side
         # (forward: everything strictly after the last row; reverse:
-        # strictly before)
+        # strictly before). The cursor came from a row inside the
+        # range, so it is tighter than the inclusive bound on its side,
+        # which it replaces.
         if reverse:
             ex = cur_ts if ex is None else min(ex, cur_ts)
+            end = None
         else:
             sx = cur_ts if sx is None else max(sx, cur_ts)
+            start = None
     dps = engine.get_data(
         stream_id,
         gran,
-        start=_parse_ts(p.get("start", p.get("s"))),
-        end=_parse_ts(p.get("end", p.get("e"))),
+        start=start,
+        end=end,
         start_exclusive=sx,
         end_exclusive=ex,
         reverse=reverse,

@@ -358,20 +358,6 @@ def _fixed_width_bits(vals: np.ndarray, width: int) -> np.ndarray:
     return bits
 
 
-def _best_rice_param(u: np.ndarray, max_param: int) -> tuple[int, int]:
-    """Exact minimum-cost parameter via vectorized sweep; returns
-    (param, cost_bits)."""
-    n = len(u)
-    best_p, best_c = 0, None
-    for p in range(max_param + 1):
-        c = n * (1 + p) + int((u >> np.uint64(p)).sum())
-        if best_c is None or c < best_c:
-            best_p, best_c = p, c
-        elif c > best_c * 2:
-            break  # cost is convex-ish; stop once clearly past minimum
-    return best_p, best_c
-
-
 _MAX_PARAM = 14
 
 

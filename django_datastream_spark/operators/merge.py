@@ -1,11 +1,12 @@
 """Generic file-scoped MERGE INTO for vanilla-parquet tables, with a
 manifest-committed EXACTLY-ONCE read path.
 
-``storage.Backend.upsert_points_agg`` solves merge for the points_agg
-table specifically; this module is the table-agnostic form — the
-engine-level ``MERGE INTO target USING source ON keys`` a CDC apply or
-backfill job needs (the reference's closest surface is its
-append/overwrite pair; MERGE is a beyond-reference completion).
+``storage.Tables.upsert_points_agg`` solves merge for the points_agg
+table specifically (on the commit log); this module is the
+table-agnostic form — the engine-level ``MERGE INTO target USING
+source ON keys`` a CDC apply or backfill job needs (the reference's
+closest surface is its append/overwrite pair; MERGE is a
+beyond-reference completion).
 
 Semantics (the Delta/Iceberg MERGE subset vanilla parquet can honor):
 
@@ -49,11 +50,11 @@ Crash-consistency contract (the exactly-once guarantee):
 Reader isolation under a live merge: ``read_committed`` pins the
 committed file list at plan time. With the default eager conflict
 delete, a reader planned before the commit can still lose a file
-mid-job (the vanilla-parquet caveat storage.upsert_points_agg
-documents); pass ``defer_conflict_delete=True`` to leave superseded
-files on disk — invisible to committed readers — and reclaim them
-later with ``vacuum_uncommitted`` during a quiesced window (Delta's
-``VACUUM`` contract, retention collapsed to "explicit call").
+mid-job (the caveat of any in-place rewrite of plain parquet); pass
+``defer_conflict_delete=True`` to leave superseded files on disk —
+invisible to committed readers — and reclaim them later with
+``vacuum_uncommitted`` during a quiesced window (Delta's ``VACUUM``
+contract, retention collapsed to "explicit call").
 
 Keys must be PARTITION-STABLE (a key's partition columns never change
 between versions — true for any layout where the partition derives

@@ -397,12 +397,6 @@ def extract_gif_features(media: DataFrame) -> DataFrame:
     return extract_image_features(media, "gif")
 
 
-def extract_bmp_features(media: DataFrame) -> DataFrame:
-    """BMP decode through the shared extractor (24-bit + paletted
-    RLE8 — q194's lossless palette oracle pins it)."""
-    return extract_image_features(media, "bmp")
-
-
 def extract_tiff_features(media: DataFrame) -> DataFrame:
     """TIFF decode through the shared extractor (strips, PackBits +
     early-change LZW — q201's lossless oracle pins it)."""

@@ -7814,8 +7814,8 @@ def q181(spark, sf_dir):
     """,
 )
 def q182(spark, sf_dir):
-    """The datastream ENGINE's hot table on the transactional layer,
-    inside the oracle gate (``Tables.TXN_POINTS``): hourly sums ingest
+    """The datastream ENGINE's hot table (``points_raw``, stored on the
+    transactional log) inside the oracle gate: hourly sums ingest
     through ``append_multiple`` in two batches split at a fixed
     mid-month instant — each batch lands as ONE log commit —
     ``compact_points_raw`` becomes an OPTIMIZE commit (the split day
@@ -7828,9 +7828,9 @@ def q182(spark, sf_dir):
     CALENDAR-bounded (≤744 hour buckets at any SF), so the
     driver-side dict hand-off is scaffolding-cheap at every scale; the
     era aggregation happens in the RETURNED plan (JVM-side), not at
-    build time.  The engine-on-txn DOWNSAMPLE equivalence (conflicted
+    build time.  The engine's DOWNSAMPLE on the log (conflicted
     tail-bucket upsert landing as one snapshot-isolated overwrite
-    commit, TXN_AGG) is pinned exactly in tests/test_txn_points.py —
+    commit) is pinned exactly in tests/test_txn_points.py —
     a full ingest→downsample→read cycle is ~40 driver-jobs and
     container job latency would put it far outside the per-query
     bench gate, so the gate carries the ops surface and pytest
@@ -7866,7 +7866,6 @@ def q182(spark, sf_dir):
     split = _dtm.datetime(2024, 1, 16, 12)
 
     engine = Datastream(spark, _os.path.join(base, "store"))
-    engine.tables.TXN_POINTS = True
     sid = engine.ensure_stream(
         {"title": "hourly-total"}, highest_granularity="hours"
     )

@@ -1,9 +1,10 @@
 """Physical table layout (SURVEY.md §1.3 / FIXTURES.md B1).
 
-Four tables under a root directory, each behind a tiny snapshot pointer
-(``_CURRENT`` names the live ``v=<n>/`` data directory — a poor man's
-Iceberg snapshot, so full-table rewrites such as vacuum/compaction are
-atomic for concurrent readers):
+Four tables under a root directory. ``streams`` and ``points_derived``
+sit behind a tiny snapshot pointer (``_CURRENT`` names the live ``v=<n>/``
+data directory — a poor man's Iceberg snapshot, so full-table rewrites
+such as vacuum/compaction are atomic for concurrent readers); the two
+datapoint tables live on the transactional commit log (:mod:`.txnlog`):
 
 - ``streams``        — metadata, stored as an APPEND-ONLY LOG of row
                        versions (``_v`` monotone, ``_deleted`` tombstone).
@@ -14,7 +15,8 @@ atomic for concurrent readers):
                        version dir and swaps the pointer.
 - ``points_raw``     — appends at each stream's highest granularity,
                        partitioned by ``p_date`` (UTC day of ts) so range
-                       scans prune partitions.
+                       scans prune partitions. Every append is one ACID
+                       commit; compaction is a ``txn_optimize`` commit.
 - ``points_derived`` — materialized datapoints of derived streams,
                        append-only with ``seq`` as the row version:
                        re-derived slots (e.g. a `sum` slot that grows as
@@ -23,10 +25,9 @@ atomic for concurrent readers):
                        superseded versions away.
 - ``points_agg``     — downsampled buckets for all coarser granularities,
                        partitioned by ``(granularity, p_date)``; upserts
-                       (recomputed boundary buckets) rewrite only the
-                       affected partitions via dynamic partition
-                       overwrite. On Delta/Iceberg both upsert paths
-                       become a plain MERGE — the layout is identical.
+                       (recomputed boundary buckets) rebuild only the
+                       affected partitions and land as ONE
+                       snapshot-isolated ``overwrite`` commit.
 
 All aggregate columns are *algebraic carriers* (sum, count, sum_squares,
 t_sum_epoch, frequencies) plus their finished presentation values, so a
@@ -34,19 +35,19 @@ coarser granularity can be computed by merging the next-finer aggregates
 without rescanning raw data — the property that makes the downsample
 cascade O(raw + Σ aggregates) instead of O(6 × raw) at 100 TB.
 
-STORAGE-REACH BOUNDARY (deliberate, round 11): the external lakehouse
-tier AND the engine's txn tier are FileIO-seam-routed — they run on
-object-store roots with no POSIX path (sources/fileio.py, txnlog's
-``_root``/``_store``). THIS module — the Datastream STORE root itself
-(the ``_CURRENT`` pointer swap via ``os.replace``, the flock'd
-external-catalog RMW) — remains POSIX-rooted: its pointer swap and
-file lock have no object-store equivalent without a coordinator. A
-deployment that wants the engine on S3 runs ``SPARK_GRAFT_TXN=1`` —
-the POINTS/AGGREGATE data tables then ride the txn tier, whose commit
-CAS is object-store-capable — leaving only the streams registry,
-pointer files and catalog POSIX-resident (pure metadata, kB-scale:
-mount or local disk both serve it). Documented here so the boundary
-is a stated contract, not an accident of ``os.`` calls.
+STORAGE-REACH BOUNDARY (deliberate): the external lakehouse tier AND
+the engine's txn tier are FileIO-seam-routed — they run on object-store
+roots with no POSIX path (sources/fileio.py, txnlog's
+``_root``/``_store``). The POINTS/AGGREGATE data tables ride the txn
+tier, whose commit CAS is object-store-capable. THIS module's own
+state — the ``_CURRENT`` pointer swap via ``os.replace`` for the
+streams registry and derived points, the flock'd external-catalog
+RMW — remains POSIX-rooted: its pointer swap and file lock have no
+object-store equivalent without a coordinator. That leaves the
+streams registry, the derived points, the pointer files and the
+catalog POSIX-resident (mount or local disk both serve them).
+Documented here so the boundary is a stated contract, not an accident
+of ``os.`` calls.
 """
 
 from __future__ import annotations
@@ -215,21 +216,23 @@ POINTS_AGG_SCHEMA = T.StructType(
 
 _PART_MARKERS = ("p_date=", "granularity=")
 
+#: tables stored on the transactional commit log (:mod:`.txnlog`)
+_TXN_TABLES = ("points_raw", "points_agg")
+
 
 class Tables:
     """Parquet-backed storage for one engine instance.
 
-    Single streaming writer per store (SURVEY T5 note). Readers are safe
-    concurrently with the SNAPSHOT-SWAPPING writers (vacuum, compaction:
-    new generation written, pointer flipped, old files retained) — but
-    NOT, by default, with upsert_points_agg, which rewrites conflicted
-    (granularity, p_date) partitions in place via dynamic partition
-    overwrite: a reader holding a pre-upsert plan over those partitions
-    can hit missing files. Same single-writer quiescence rule as
-    vacuum. Set ``AGG_UPSERT_SNAPSHOT = True`` to route conflicted agg
-    upserts through the snapshot-swap path too (reader-safe, at
-    O(partition dirs) link metadata per upsert); a table format
-    (Delta/Iceberg MERGE) removes the trade wholesale.
+    ``points_raw`` and ``points_agg`` are commit-log tables: appends,
+    aggregate upserts, compaction and dead-row deletes are
+    snapshot-isolated commits, so readers are safe concurrently with
+    every one of them (superseded files stay until ``txn_vacuum``).
+    ``streams`` and ``points_derived`` keep a single writer per store
+    (SURVEY T5 note): readers are safe concurrently with their
+    SNAPSHOT-SWAPPING writers (vacuum, compaction: new generation
+    written, pointer flipped, old files retained), while rows appended
+    during such a swap would be dropped — the quiescence rule vacuum
+    documents.
     """
 
     #: auto-compact the streams version log once it exceeds this many
@@ -242,52 +245,13 @@ class Tables:
     #: multi-writer metadata deployments and compact from one owner
     auto_compact_streams = True
 
-    #: reader-safe aggregate upserts: when True, a CONFLICTED
-    #: upsert_points_agg (one that must replace existing buckets)
-    #: writes the rebuilt partitions into a fresh snapshot generation —
-    #: untouched partitions HARDLINKED, conflicted ones rewritten — and
-    #: atomically swaps the ``_CURRENT`` pointer, so a reader holding a
-    #: pre-upsert plan never loses a file mid-job (the same guarantee
-    #: vacuum/compaction already give). Costs O(total partition dirs)
-    #: link metadata per conflicted upsert, so it's OFF by default for
-    #: the per-micro-batch auto_downsample hot path (where the
-    #: documented single-writer/reader-quiescence rule applies) and ON
-    #: for deployments with long-running concurrent readers. Fresh-only
-    #: upserts are plain appends either way (appends never break a
-    #: running reader). Delta/Iceberg make this flag moot.
-    AGG_UPSERT_SNAPSHOT = False
-
-    #: snapshot generations retained per table (current + priors).
-    #: 2 (default) preserves today's reader-safety guarantee; raise it
-    #: to keep a deeper time-travel history at rewrite-size disk cost
-    #: per generation (snapshots share nothing — this is the honest
-    #: local-parquet trade; Delta/Iceberg share unchanged files)
+    #: snapshot generations retained per snapshot-pointer table
+    #: (current + priors). 2 (default) preserves today's reader-safety
+    #: guarantee; raise it to keep a deeper time-travel history at
+    #: rewrite-size disk cost per generation (snapshots share nothing —
+    #: this is the honest local-parquet trade; the commit-log tables
+    #: share unchanged files)
     SNAPSHOT_RETAIN = 2
-
-    #: OPT-IN: route ``points_raw`` — the engine's hottest table —
-    #: through the transactional commit log (:mod:`.txnlog`) instead
-    #: of versioned snapshot dirs. Appends become ACID commits
-    #: (multi-writer safe, auto-rebasing), compaction becomes
-    #: ``txn_optimize`` (commutes with concurrent appends), dead-rows
-    #: cleanup becomes deletion vectors, and time travel runs over
-    #: the commit log (every version, not SNAPSHOT_RETAIN
-    #: generations). Default OFF: the plain-parquet path keeps its
-    #: documented single-writer contract and zero extra metadata.
-    #: ``SPARK_GRAFT_TXN=1`` in the environment flips BOTH txn flags
-    #: process-wide (the measured-decision switch — see
-    #: BENCH_NOTES.md "engine-on-txn" for the recorded trade-off).
-    TXN_POINTS = os.environ.get("SPARK_GRAFT_TXN", "") == "1"
-
-    #: OPT-IN: route ``points_agg`` through the commit log too. The
-    #: headline win is the conflicted aggregate upsert: instead of
-    #: dynamic partition overwrite (reader-unsafe, the documented
-    #: quiescence rule) or AGG_UPSERT_SNAPSHOT (O(partition dirs)
-    #: links), it becomes ONE snapshot-isolated ``overwrite`` commit —
-    #: readers keep the files of the snapshot they planned against,
-    #: and a racing writer loses the CAS and retries. Makes both
-    #: legacy trade-offs moot, exactly as the AGG_UPSERT_SNAPSHOT
-    #: docstring predicted a table format would.
-    TXN_AGG = os.environ.get("SPARK_GRAFT_TXN", "") == "1"
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -342,22 +306,21 @@ class Tables:
 
     # -- time travel ---------------------------------------------------------
     def snapshot_versions(self, table: str) -> list[int]:
-        """Retained snapshot versions for ``table``, oldest first. A
-        new version is cut at every rewrite boundary (compaction,
-        aggregate upsert, log compaction); plain appends accrete into
-        the current snapshot — so time travel is at rewrite
-        granularity, like any snapshot-pointer table format.  Under
-        ``TXN_POINTS``, ``points_raw`` versions are COMMIT versions —
-        every append/optimize/delete is time-travelable until
-        vacuum."""
-        if table == "points_raw" and self.TXN_POINTS:
+        """Retained snapshot versions for ``table``, oldest first. On
+        the snapshot-pointer tables a new version is cut at every
+        rewrite boundary (compaction, log compaction); appends accrete
+        into the current snapshot — so time travel is at rewrite
+        granularity, like any snapshot-pointer table format.  On the
+        commit-log tables (``points_raw``, ``points_agg``) versions are
+        COMMIT versions — every append/upsert/optimize/delete is
+        time-travelable until vacuum."""
+        if table in _TXN_TABLES:
             from . import txnlog as TL
 
-            if not TL.is_txn_table(self.points_raw_path):
+            root = getattr(self, f"{table}_path")
+            if not TL.is_txn_table(root):
                 return []
-            return list(
-                range(1, TL.latest_version(self.points_raw_path) + 1)
-            )
+            return list(range(1, TL.latest_version(root) + 1))
         tdir = os.path.join(self.root, table)
         if not os.path.isdir(tdir):
             return []
@@ -375,15 +338,13 @@ class Tables:
         (raw stored rows — for the streams table that is the metadata
         log state at that snapshot). Raises ``ValueError`` if the
         version was never cut or was vacuumed by retention."""
-        if table == "points_raw" and self.TXN_POINTS:
+        if table in _TXN_TABLES:
             from . import txnlog as TL
 
             if version not in self.snapshot_versions(table):
-                raise ValueError(
-                    f"points_raw commit v{version} not in log"
-                )
+                raise ValueError(f"{table} commit v{version} not in log")
             return TL.txn_read(
-                self.spark, self.points_raw_path, version=version
+                self.spark, getattr(self, f"{table}_path"), version=version
             )
         if version not in self.snapshot_versions(table):
             raise ValueError(
@@ -395,18 +356,16 @@ class Tables:
             os.path.join(self.root, table, f"v={version}")
         )
 
-    # -- paths (current snapshot) --------------------------------------------
+    # -- paths ---------------------------------------------------------------
+    # a txn table's root is FIXED (versioning lives in the commit log);
+    # the snapshot-pointer tables resolve to their current v=<n> dir
     @property
     def streams_path(self) -> str:
         return self._data_dir("streams")
 
     @property
     def points_raw_path(self) -> str:
-        if self.TXN_POINTS:
-            # a txn table's root is FIXED: versioning lives in the
-            # commit log, not in v=<n> snapshot dirs
-            return os.path.join(self.root, "points_raw_txn")
-        return self._data_dir("points_raw")
+        return os.path.join(self.root, "points_raw_txn")
 
     @property
     def points_derived_path(self) -> str:
@@ -414,9 +373,7 @@ class Tables:
 
     @property
     def points_agg_path(self) -> str:
-        if self.TXN_AGG:
-            return os.path.join(self.root, "points_agg_txn")
-        return self._data_dir("points_agg")
+        return os.path.join(self.root, "points_agg_txn")
 
     # -- external-table catalog (lakehouse interop by NAME) -----------
     @property
@@ -467,19 +424,19 @@ class Tables:
             for n in os.listdir(path)
         )
 
-    def _migrate_plain_to_txn(self, table: str, txn_root: str) -> None:
-        """Zero-copy upgrade for the SPARK_GRAFT_TXN=1 flip over an
-        EXISTING plain store: hard-link the plain table's current
+    def _migrate_plain_to_txn(self, table: str) -> None:
+        """One-way zero-copy upgrade of a store written in the legacy
+        plain-parquet layout (``<table>/v=<n>/...`` behind a
+        ``_CURRENT`` pointer): hard-link the plain table's current
         snapshot files into the txn root (partition dirs preserved)
-        and adopt them as commit 1, so the first txn-mode READ sees
-        the full history instead of an empty fresh table.  Idempotent
-        (no-op once the txn log exists) and metadata-only — bytes are
-        shared inodes; the plain snapshot dirs stay untouched as the
-        rollback path (flip the flag back).  Runs under the plain
-        path's documented single-writer quiescence rule, like every
-        generation swap."""
+        and adopt them as commit 1, so the first READ sees the full
+        history instead of an empty fresh table.  Idempotent (no-op
+        once the txn log exists) and metadata-only — bytes are shared
+        inodes and the plain snapshot dirs are left untouched.  Run
+        it with the legacy store's writers quiesced."""
         from . import txnlog as TL
 
+        txn_root = getattr(self, f"{table}_path")
         if TL.is_txn_table(txn_root):
             return
         plain = self._data_dir(table)
@@ -612,106 +569,48 @@ class Tables:
 
     # -- raw points ------------------------------------------------------------
     def read_points_raw(self) -> DataFrame:
-        if self.TXN_POINTS:
-            from . import txnlog as TL
+        from . import txnlog as TL
 
-            self._migrate_plain_to_txn("points_raw", self.points_raw_path)
-            if not TL.is_txn_table(self.points_raw_path):
-                return self.spark.createDataFrame(
-                    [], POINTS_RAW_SCHEMA
-                ).withColumn("p_date", F.to_date("ts"))
-            return TL.txn_read(self.spark, self.points_raw_path)
-        if not self._exists(self.points_raw_path):
-            return local_rows_df(self.spark, [], POINTS_RAW_SCHEMA).withColumn(
-                "p_date", F.to_date("ts")
-            )
-        return self.spark.read.parquet(self.points_raw_path)
+        self._migrate_plain_to_txn("points_raw")
+        if not TL.is_txn_table(self.points_raw_path):
+            return self.spark.createDataFrame(
+                [], POINTS_RAW_SCHEMA
+            ).withColumn("p_date", F.to_date("ts"))
+        return TL.txn_read(self.spark, self.points_raw_path)
 
     def append_points_raw(self, df: DataFrame) -> None:
-        if self.TXN_POINTS:
-            from . import txnlog as TL
+        """One ACID ``append`` commit (auto-rebasing: concurrent
+        appenders never conflict)."""
+        from . import txnlog as TL
 
-            self._migrate_plain_to_txn("points_raw", self.points_raw_path)
-            TL.txn_append(
-                self.spark,
-                df.withColumn("p_date", F.to_date("ts")),
-                self.points_raw_path,
-                ["p_date"],
-                writer="ingest",
-            )
-            return
-        (
-            df.withColumn("p_date", F.to_date("ts"))
-            .write.mode("append")
-            .partitionBy("p_date")
-            .parquet(self.points_raw_path)
+        self._migrate_plain_to_txn("points_raw")
+        TL.txn_append(
+            self.spark,
+            df.withColumn("p_date", F.to_date("ts")),
+            self.points_raw_path,
+            ["p_date"],
+            writer="ingest",
         )
 
     def compact_points_raw(
-        self,
-        max_files_per_partition: int = 8,
-        target_file_bytes: int = 128 * 1024 * 1024,
+        self, target_file_bytes: int = 128 * 1024 * 1024
     ) -> int:
-        """OPTIMIZE-style small-file compaction: rewrite only the p_date
-        partitions holding more than ``max_files_per_partition`` parquet
-        files (continuous ingest appends one file per micro-batch per
-        partition), sized at ~``target_file_bytes`` apiece. Untouched
-        partitions are HARDLINKED into the fresh snapshot dir, so the cost
-        is O(compacted bytes) + O(total files) metadata, and the atomic
-        ``_CURRENT`` swap keeps concurrent readers safe (one retained
-        generation). Writer must be quiesced, as with vacuum. On
-        Delta/Iceberg this is OPTIMIZE / rewrite_data_files. Returns the
-        number of partitions compacted."""
+        """OPTIMIZE-style small-file compaction (continuous ingest
+        appends one file per micro-batch per partition): one
+        ``txn_optimize`` commit rewrites each partition's small files
+        into ~``target_file_bytes`` apiece. It commutes with concurrent
+        appends (no quiescence needed), and superseded files stay for
+        snapshot readers until ``txn_vacuum``. On Delta/Iceberg this is
+        OPTIMIZE / rewrite_data_files. Returns the number of files
+        rewritten."""
+        from . import txnlog as TL
+
         src = self.points_raw_path
-        if self.TXN_POINTS:
-            from . import txnlog as TL
-
-            self._migrate_plain_to_txn("points_raw", src)
-            if not TL.is_txn_table(src):
-                return 0
-            # txn path: OPTIMIZE commit — commutes with concurrent
-            # appends (no quiescence needed), superseded files stay
-            # for snapshot readers until txn_vacuum
-            res = TL.txn_optimize(
-                self.spark, src, target_file_bytes=target_file_bytes
-            )
-            return int(res.get("rewritten_files") or 0)
-        if not self._exists(src):
+        self._migrate_plain_to_txn("points_raw")
+        if not TL.is_txn_table(src):
             return 0
-        parts: dict[str, list[str]] = {}
-        for name in os.listdir(src):
-            d = os.path.join(src, name)
-            if name.startswith("p_date=") and os.path.isdir(d):
-                parts[name] = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        targets = {
-            name: files
-            for name, files in parts.items()
-            if len(files) > max_files_per_partition
-        }
-        if not targets:
-            return 0
-
-        def write(new_dir: str) -> None:
-            os.makedirs(new_dir, exist_ok=True)
-            for name, files in parts.items():
-                if name in targets:
-                    d = os.path.join(src, name)
-                    nbytes = sum(os.path.getsize(os.path.join(d, f)) for f in files)
-                    n_out = max(1, -(-nbytes // target_file_bytes))
-                    (
-                        self.spark.read.parquet(d)
-                        .coalesce(int(n_out))
-                        .write.mode("overwrite")
-                        .parquet(os.path.join(new_dir, name))
-                    )
-                else:
-                    dst = os.path.join(new_dir, name)
-                    os.makedirs(dst, exist_ok=True)
-                    for f in parts[name]:
-                        os.link(os.path.join(src, name, f), os.path.join(dst, f))
-
-        self._swap_version("points_raw", write)
-        return len(targets)
+        res = TL.txn_optimize(self.spark, src, target_file_bytes=target_file_bytes)
+        return int(res.get("rewritten_files") or 0)
 
     # -- derived points (versioned by seq) --------------------------------------
     def read_points_derived(self, latest_only: bool = True) -> DataFrame:
@@ -812,18 +711,12 @@ class Tables:
 
     # -- aggregates --------------------------------------------------------------
     def read_points_agg(self) -> DataFrame:
-        if self.TXN_AGG:
-            from . import txnlog as TL
+        from . import txnlog as TL
 
-            self._migrate_plain_to_txn("points_agg", self.points_agg_path)
-            if not TL.is_txn_table(self.points_agg_path):
-                return local_rows_df(self.spark, [], POINTS_AGG_SCHEMA)
-            return TL.txn_read(self.spark, self.points_agg_path).select(
-                *[f.name for f in POINTS_AGG_SCHEMA.fields]
-            )
-        if not self._exists(self.points_agg_path):
+        self._migrate_plain_to_txn("points_agg")
+        if not TL.is_txn_table(self.points_agg_path):
             return local_rows_df(self.spark, [], POINTS_AGG_SCHEMA)
-        return self.spark.read.parquet(self.points_agg_path).select(
+        return TL.txn_read(self.spark, self.points_agg_path).select(
             *[f.name for f in POINTS_AGG_SCHEMA.fields]
         )
 
@@ -834,95 +727,33 @@ class Tables:
 
         1. the incoming batch is pinned (localCheckpoint — bounded by the
            batch, not by partition contents),
-        2. touched partitions are probed for key collisions (one semi-join
-           over the partition-pruned scan; the collided partition LIST is
-           collected — metadata bounded by touched-partition count),
-        3. conflicted partitions get read-modify-overwrite via dynamic
-           partition overwrite; all remaining new rows are a plain APPEND
-           (zero read-back, zero rewrite).
+        2. touched partitions of the snapshot the upsert reads are probed
+           for key collisions (one semi-join; the collided partition LIST
+           is collected — metadata bounded by touched-partition count),
+        3. conflicted partitions rebuild into staged files and land with
+           their superseded files' removal as ONE snapshot-isolated
+           ``overwrite`` commit; all remaining new rows are a blind
+           ``append`` commit (zero read-back, zero rewrite).
 
-        Under steady auto_downsample most batches only append fresh
-        buckets + recompute the watermark-tail bucket, so per-batch
-        rewrite volume is the conflicted tail partitions, not every
-        partition the batch touches. Delta/Iceberg MERGE in production;
-        same touched volume."""
+        Readers keep the snapshot they planned against (superseded files
+        stay until ``txn_vacuum``); a racing writer on the same
+        partitions loses the CAS and must re-run. Under steady
+        auto_downsample most batches only append fresh buckets +
+        recompute the watermark-tail bucket, so per-batch rewrite volume
+        is the conflicted tail partitions, not every partition the batch
+        touches."""
+        import uuid as _uuid
+
+        from . import txnlog as TL
+
         df = (
             df.select(*[f.name for f in POINTS_AGG_SCHEMA.fields])
             .withColumn("p_date", F.to_date("bucket_ts"))
             .localCheckpoint(eager=True)
         )
+        self._migrate_plain_to_txn("points_agg")
         path = self.points_agg_path
         key = ["stream_id", "granularity", "bucket_ts"]
-        if self.TXN_AGG:
-            self._migrate_plain_to_txn("points_agg", self.points_agg_path)
-            self._txn_upsert_points_agg(df, key)
-            return
-        if not self._exists(path):
-            df.write.mode("append").partitionBy("granularity", "p_date").parquet(path)
-            return
-        existing = self.spark.read.parquet(path).select(df.columns)
-        touched = df.select("granularity", "p_date").distinct()
-        conflicts = (
-            existing.join(F.broadcast(touched), ["granularity", "p_date"], "left_semi")
-            .join(F.broadcast(df.select(*key)), key, "left_semi")
-            .select("granularity", "p_date")
-            .distinct()
-            .collect()  # metadata: bounded by touched-partition count
-        )
-        new_rows = df
-        if conflicts:
-            cdf = local_rows_df(
-                self.spark,
-                [(r["granularity"], r["p_date"]) for r in conflicts],
-                "granularity string, p_date date",
-            )
-            keep = (
-                existing.join(F.broadcast(cdf), ["granularity", "p_date"], "left_semi")
-                .join(df.select(*key), key, "left_anti")
-            )
-            out = keep.unionByName(
-                df.join(F.broadcast(cdf), ["granularity", "p_date"], "left_semi")
-            )
-            # cut lineage from the path being overwritten (bounded: only
-            # the conflicted watermark-tail partitions)
-            out = out.localCheckpoint(eager=True)
-            if self.AGG_UPSERT_SNAPSHOT:
-                # reader-safe path: everything (rebuilt conflicted
-                # partitions + fresh rows) lands in a new snapshot
-                # generation, swapped atomically
-                self._agg_upsert_snapshot(df, conflicts, out)
-                return
-            mode_key = "spark.sql.sources.partitionOverwriteMode"
-            prev = self.spark.conf.get(mode_key, "static")
-            self.spark.conf.set(mode_key, "dynamic")
-            try:
-                out.write.mode("overwrite").partitionBy(
-                    "granularity", "p_date"
-                ).parquet(path)
-            finally:
-                self.spark.conf.set(mode_key, prev)
-            new_rows = df.join(
-                F.broadcast(cdf), ["granularity", "p_date"], "left_anti"
-            )
-        if new_rows.head(1):
-            new_rows.write.mode("append").partitionBy("granularity", "p_date").parquet(
-                path
-            )
-
-    def _txn_upsert_points_agg(self, df, key) -> None:
-        """TXN_AGG form of the conflicted aggregate upsert: the
-        partitions that replace existing buckets rebuild into staged
-        files and land with their superseded files' removal as ONE
-        snapshot-isolated ``overwrite`` commit; fresh rows are a blind
-        append commit.  Readers keep the snapshot they planned against
-        (superseded files stay until ``txn_vacuum``); a racing writer
-        on the same partitions loses the CAS and must re-run.  Both
-        AGG_UPSERT_SNAPSHOT and the quiescence rule are moot here."""
-        import uuid as _uuid
-
-        from . import txnlog as TL
-
-        path = self.points_agg_path
         parts = ["granularity", "p_date"]
         if not TL.is_txn_table(path):
             TL.txn_append(self.spark, df, path, parts, writer="agg")
@@ -978,65 +809,3 @@ class Tables:
             new_rows = df.join(F.broadcast(cdf), parts, "left_anti")
         if new_rows.head(1):
             TL.txn_append(self.spark, new_rows, path, parts, writer="agg")
-
-    def _agg_upsert_snapshot(self, df, conflicts, rebuilt) -> None:
-        """Snapshot-generation form of a conflicted aggregate upsert
-        (AGG_UPSERT_SNAPSHOT): hardlink every unconflicted
-        (granularity, p_date) partition into v=<n+1>, write the rebuilt
-        conflicted partitions plus the batch's fresh rows there, swap
-        ``_CURRENT``. Readers planned against v=<n> finish safely (one
-        retained generation), exactly like vacuum/compaction."""
-        src = self.points_agg_path
-        conflict_set = {(r["granularity"], str(r["p_date"])) for r in conflicts}
-        cdf = local_rows_df(
-            self.spark,
-            [(r["granularity"], r["p_date"]) for r in conflicts],
-            "granularity string, p_date date",
-        )
-        fresh = df.join(F.broadcast(cdf), ["granularity", "p_date"], "left_anti")
-
-        def write(new_dir: str) -> None:
-            os.makedirs(new_dir, exist_ok=True)
-            for gdir in os.listdir(src):
-                if not gdir.startswith("granularity="):
-                    continue
-                g = gdir.split("=", 1)[1]
-                gpath = os.path.join(src, gdir)
-                for pdir in os.listdir(gpath):
-                    if not pdir.startswith("p_date="):
-                        continue
-                    p = pdir.split("=", 1)[1]
-                    if (g, p) in conflict_set:
-                        continue  # rewritten below
-                    s = os.path.join(gpath, pdir)
-                    d = os.path.join(new_dir, gdir, pdir)
-                    os.makedirs(d, exist_ok=True)
-                    for f in os.listdir(s):
-                        if f.endswith(".parquet"):
-                            os.link(os.path.join(s, f), os.path.join(d, f))
-            rebuilt.unionByName(fresh).write.mode("append").partitionBy(
-                "granularity", "p_date"
-            ).parquet(new_dir)
-
-        self._swap_version("points_agg", write)
-
-    def append_points_agg(self, df: DataFrame) -> None:
-        out = df.select(
-            *[f.name for f in POINTS_AGG_SCHEMA.fields]
-        ).withColumn("p_date", F.to_date("bucket_ts"))
-        if self.TXN_AGG:
-            from . import txnlog as TL
-
-            TL.txn_append(
-                self.spark,
-                out,
-                self.points_agg_path,
-                ["granularity", "p_date"],
-                writer="agg",
-            )
-            return
-        (
-            out.write.mode("append")
-            .partitionBy("granularity", "p_date")
-            .parquet(self.points_agg_path)
-        )

@@ -421,7 +421,8 @@ def test_downsample_with_watermarkless_streams_stays_complete(engine):
 
 def test_vacuum_keeps_planned_reader_valid(engine):
     """A DataFrame planned before vacuum must still be fully readable
-    after it — _swap_version retains the previous snapshot generation."""
+    after it — txn_vacuum keeps every file the live snapshot references
+    and _swap_version retains the previous snapshot generation."""
     sid = engine.ensure_stream({"title": "vr"})
     engine.append_multiple(
         [{"stream_id": sid, "value": float(i), "timestamp": ts(i)} for i in range(50)]

@@ -127,29 +127,34 @@ def test_stream_datapoints_cursor(spark, tmp_path):
             for i in range(25)
         ]
     )
-    got = []
-    cursor = None
-    pages = 0
-    while True:
-        p = {"cursor": cursor} if cursor else {}
-        page = http_api.stream_datapoints(ds, sid, params=p, limit=10)
-        got.extend(d["v"] for d in page["datapoints"])
-        cursor = page["meta"]["next_cursor"]
-        pages += 1
-        if not cursor or not page["datapoints"]:
-            break
-        assert pages < 10
-    assert got == [float(i) for i in range(25)]
+
+    def walk(params):
+        got, cursor = [], None
+        for _ in range(10):
+            p = dict(params, cursor=cursor) if cursor else dict(params)
+            page = http_api.stream_datapoints(ds, sid, params=p, limit=10)
+            got.extend(d["v"] for d in page["datapoints"])
+            cursor = page["meta"]["next_cursor"]
+            if not cursor or not page["datapoints"]:
+                return got
+        raise AssertionError("cursor walk did not terminate")
+
+    def iso(i):
+        return (t0 + dt.timedelta(seconds=i)).isoformat()
+
+    assert walk({}) == [float(i) for i in range(25)]
     # reverse paging through the same cursor contract
-    got_r = []
-    cursor = None
-    while True:
-        p = {"r": "1"}
-        if cursor:
-            p["cursor"] = cursor
-        page = http_api.stream_datapoints(ds, sid, params=p, limit=10)
-        got_r.extend(d["v"] for d in page["datapoints"])
-        cursor = page["meta"]["next_cursor"]
-        if not cursor or not page["datapoints"]:
-            break
-    assert got_r == [float(i) for i in reversed(range(25))]
+    assert walk({"r": "1"}) == [float(i) for i in reversed(range(25))]
+    # a bounded range keeps its bounds across pages: the cursor replaces
+    # the inclusive bound on its own side (forward: start, reverse: end)
+    # and the opposite bound still applies
+    assert walk({"start": iso(3)}) == [float(i) for i in range(3, 25)]
+    assert walk({"r": "1", "end": iso(21)}) == [
+        float(i) for i in reversed(range(22))
+    ]
+    assert walk({"start": iso(2), "end": iso(22)}) == [
+        float(i) for i in range(2, 23)
+    ]
+    assert walk({"r": "1", "start": iso(2), "end": iso(22)}) == [
+        float(i) for i in reversed(range(2, 23))
+    ]

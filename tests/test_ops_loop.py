@@ -15,7 +15,6 @@ fast source passed) can't regress silently.
 from __future__ import annotations
 
 import datetime as dt
-import glob
 import json
 import math
 import os
@@ -24,6 +23,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from django_datastream_spark import txnlog as TL
 from django_datastream_spark.api import Datastream
 from django_datastream_spark.streaming.ingest import StreamingIngest
 
@@ -143,29 +143,21 @@ def test_ops_loop_soak(spark, tmp_path, transport):
         # maintenance every third cycle, between micro-batches (the
         # documented writer-quiesced window for an availableNow loop)
         if cycle % 3 == 2:
-            engine.tables.compact_points_raw(max_files_per_partition=2)
+            engine.tables.compact_points_raw()
             engine.vacuum()
 
         check_cycle()
 
     # file growth is bounded by maintenance: after 12 append-y batches +
     # 4 compaction cycles, each p_date partition holds a handful of
-    # files, not one per batch. Under SPARK_GRAFT_TXN the live set is
-    # the commit-log snapshot (superseded files legitimately remain on
-    # disk for snapshot readers until vacuum's retention passes), so
-    # count LIVE files there; the plain path counts the data dir.
+    # LIVE files in the commit-log snapshot, not one per batch
+    # (superseded files legitimately remain on disk for snapshot
+    # readers until vacuum's retention passes)
     by_part: dict[str, int] = {}
-    if engine.tables.TXN_POINTS:
-        from django_datastream_spark import txnlog as TL
-
-        _, live = TL.snapshot(engine.tables.points_raw_path)
-        for rel in live:
-            d = os.path.dirname(rel)
-            by_part[d] = by_part.get(d, 0) + 1
-    else:
-        raw_dir = engine.tables._data_dir("points_raw")
-        for f in glob.glob(f"{raw_dir}/p_date=*/*.parquet"):
-            by_part[os.path.dirname(f)] = by_part.get(os.path.dirname(f), 0) + 1
+    _, live = TL.snapshot(engine.tables.points_raw_path)
+    for rel in live:
+        d = os.path.dirname(rel)
+        by_part[d] = by_part.get(d, 0) + 1
     assert by_part, "no raw files?"
     assert max(by_part.values()) <= 5, by_part
 

@@ -1,7 +1,8 @@
-"""The core engine's hottest table on the transactional layer:
-``Tables.TXN_POINTS = True`` routes points_raw appends/reads/compaction
-through the commit log (ACID, multi-writer-safe, commit-granular time
-travel) while every engine behavior stays identical to the plain path.
+"""The core engine's datapoint tables on the transactional layer:
+points_raw appends/reads/compaction and points_agg upserts run through
+the commit log (ACID, multi-writer-safe, commit-granular time travel),
+and a store written in the legacy plain-parquet layout is adopted on
+first access.
 """
 
 from __future__ import annotations
@@ -23,9 +24,7 @@ def ts(i: int) -> dt.datetime:
 
 @pytest.fixture()
 def engine(spark, tmp_path) -> Datastream:
-    e = Datastream(spark, str(tmp_path / "store"))
-    e.tables.TXN_POINTS = True
-    return e
+    return Datastream(spark, str(tmp_path / "store"))
 
 
 def _ingest(engine, n=120):
@@ -117,8 +116,8 @@ def test_engine_vacuum_uses_deletion_vectors(engine):
 
 def test_engine_time_travel_is_commit_granular(engine):
     """snapshot_versions/read_table_at run over the commit log: every
-    append is its own time-travelable version (the plain path only
-    keeps SNAPSHOT_RETAIN rewrite generations)."""
+    append is its own time-travelable version (the snapshot-pointer
+    tables only keep SNAPSHOT_RETAIN rewrite generations)."""
     sid = _ingest(engine, n=10)
     engine.append_multiple(
         [
@@ -136,9 +135,9 @@ def test_engine_time_travel_is_commit_granular(engine):
 
 
 def test_streaming_ingest_lands_as_commits(spark, tmp_path):
-    """StreamingIngest writes through append_points_raw, so with
-    TXN_POINTS each micro-batch is its own log commit — validation,
-    rejects and metadata advance behave identically."""
+    """StreamingIngest writes through append_points_raw, so each
+    micro-batch is its own log commit — validation, rejects and
+    metadata advance behave identically."""
     import json
     import os
 
@@ -150,7 +149,6 @@ def test_streaming_ingest_lands_as_commits(spark, tmp_path):
         )
 
     e = Datastream(spark, str(tmp_path / "store"))
-    e.tables.TXN_POINTS = True
     sid = e.ensure_stream({"title": "s"})
     src = str(tmp_path / "incoming")
     ing = StreamingIngest(e, src, str(tmp_path / "cp"))
@@ -180,86 +178,83 @@ def test_streaming_ingest_lands_as_commits(spark, tmp_path):
 
 @pytest.mark.slow
 def test_agg_upserts_are_snapshot_isolated_commits(spark, tmp_path):
-    """TXN_AGG: downsample → append more → downsample again (the
-    watermark-tail bucket recomputes = a conflicted upsert). The txn
-    engine's aggregates match a plain engine's exactly, and the
+    """downsample → append more → downsample again (the watermark-tail
+    bucket recomputes = a conflicted upsert). The per-minute aggregates
+    equal the exact mean/count of the 180 generated points, and the
     conflicted upsert shows up as one ``overwrite`` commit."""
-    def build(root, txn):
-        e = Datastream(spark, root)
-        if txn:
-            e.tables.TXN_POINTS = True
-            e.tables.TXN_AGG = True
-        sid = e.ensure_stream(
-            {"title": "x"}, highest_granularity="seconds"
-        )
-        e.append_multiple(
-            [
-                {"stream_id": sid, "timestamp": ts(i), "value": float(i)}
-                for i in range(90)
-            ]
-        )
-        e.downsample_streams(until=ts(90))
-        e.append_multiple(
-            [
-                {"stream_id": sid, "timestamp": ts(90 + i),
-                 "value": float(i)}
-                for i in range(90)
-            ]
-        )
-        e.downsample_streams(until=ts(3600))
-        return e, sid
+    e = Datastream(spark, str(tmp_path / "store"))
+    sid = e.ensure_stream({"title": "x"}, highest_granularity="seconds")
+    # two batches of 90 points, one per second, values 0..89 each
+    batches = [
+        [(90 * b + i, float(i)) for i in range(90)] for b in (0, 1)
+    ]
+    e.append_multiple(
+        [{"stream_id": sid, "timestamp": ts(s), "value": v}
+         for s, v in batches[0]]
+    )
+    e.downsample_streams(until=ts(90))
+    e.append_multiple(
+        [{"stream_id": sid, "timestamp": ts(s), "value": v}
+         for s, v in batches[1]]
+    )
+    e.downsample_streams(until=ts(3600))
 
-    plain, sid_p = build(str(tmp_path / "plain"), txn=False)
-    txn, sid_t = build(str(tmp_path / "txn"), txn=True)
-
-    def aggs(e, sid):
-        return [
-            (r["t"]["mean"], r["v"]["mean"], r["v"]["count"])
-            for r in e.get_data(
-                sid, "minutes",
-                value_downsamplers=["mean", "count"],
-                time_downsamplers=["mean"],
-            )
-        ]
-
-    assert aggs(plain, sid_p) == aggs(txn, sid_t)
+    by_minute: dict[int, list[float]] = {}
+    for s, v in batches[0] + batches[1]:
+        by_minute.setdefault(s // 60, []).append(v)
+    want = [
+        (T0.replace(tzinfo=None) + dt.timedelta(minutes=m),
+         sum(vs) / len(vs), len(vs))
+        for m, vs in sorted(by_minute.items())
+    ]
+    got = [
+        (r["bucket"], r["v"]["mean"], r["v"]["count"])
+        for r in e.get_data(
+            sid, "minutes", value_downsamplers=["mean", "count"]
+        )
+    ]
+    assert got == want
     ops = [
         r["op"]
-        for r in TL.txn_history(
-            spark, txn.tables.points_agg_path
-        ).collect()
+        for r in TL.txn_history(spark, e.tables.points_agg_path).collect()
     ]
     assert "overwrite" in ops  # the tail-bucket recompute
     assert "append" in ops
 
 
 def test_mode_flip_adopts_existing_plain_store(spark, tmp_path):
-    """Turning txn mode ON over an EXISTING plain store (the
-    SPARK_GRAFT_TXN=1 upgrade path) must adopt the committed files on
-    the FIRST READ — not silently show an empty table until the first
-    append triggers adoption — and subsequent appends commit through
+    """A store whose points_raw is in the legacy plain-parquet layout
+    (``points_raw/v=0/p_date=<day>/*.parquet`` in POINTS_RAW_SCHEMA)
+    must be adopted on the FIRST READ — not silently show an empty
+    table until the first append — and later appends commit through
     the log on top of the adopted history."""
-    plain = Datastream(spark, str(tmp_path / "store"))
-    sid = _ingest(plain, n=50)
-    agg_rows_before = plain.tables.read_points_agg().count()
+    from pyspark.sql import functions as F
 
-    upgraded = Datastream(spark, str(tmp_path / "store"))
-    upgraded.tables.TXN_POINTS = True
-    upgraded.tables.TXN_AGG = True
+    from django_datastream_spark.storage import POINTS_RAW_SCHEMA
+
+    e = Datastream(spark, str(tmp_path / "store"))
+    sid = e.ensure_stream({"title": "legacy"}, highest_granularity="seconds")
+    # ensure_stream writes no datapoints: the store has no txn table yet
+    assert not TL.is_txn_table(e.tables.points_raw_path)
+    # 50 points over two UTC days, seq = insertion order
+    legacy_ts = [ts(86400 - 25 + i) for i in range(50)]
+    spark.createDataFrame(
+        [(sid, t, i, float(i), None, None) for i, t in enumerate(legacy_ts)],
+        POINTS_RAW_SCHEMA,
+    ).withColumn("p_date", F.to_date("ts")).write.partitionBy(
+        "p_date"
+    ).parquet(str(tmp_path / "store" / "points_raw" / "v=0"))
+
     # read BEFORE any write: the adoption commit must happen here
-    got = [
-        p["v"] for p in upgraded.get_data(sid, "seconds")
-    ]
+    got = [p["v"] for p in e.get_data(sid, "seconds")]
     assert got == [float(i) for i in range(50)]
-    assert TL.is_txn_table(upgraded.tables.points_raw_path)
-    # agg table adopts on read too (empty or not)
-    assert upgraded.tables.read_points_agg().count() == agg_rows_before
+    assert TL.is_txn_table(e.tables.points_raw_path)
+    assert TL.latest_version(e.tables.points_raw_path) == 1
 
-    # post-flip appends are log commits over the adopted base
-    v0 = TL.latest_version(upgraded.tables.points_raw_path)
-    upgraded.append_multiple(
-        [{"stream_id": sid, "timestamp": ts(50), "value": 50.0}]
+    # post-adoption appends are log commits over the adopted base
+    e.append_multiple(
+        [{"stream_id": sid, "timestamp": ts(86400 + 25), "value": 50.0}]
     )
-    assert TL.latest_version(upgraded.tables.points_raw_path) > v0
-    got = [p["v"] for p in upgraded.get_data(sid, "seconds")]
+    assert TL.latest_version(e.tables.points_raw_path) == 2
+    got = [p["v"] for p in e.get_data(sid, "seconds")]
     assert got == [float(i) for i in range(51)]
